@@ -364,8 +364,10 @@ def block_search(
         qid: list(dict.fromkeys(tokenize_query(q))) for qid, q in queries.items()
     }
     all_terms = sorted({t for ts in qterms.values() for t in ts})
+    from search_engine_spark.operators.query import _RESULT_SCHEMA, _term_table, topk
+
     if not all_terms:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _term_table(spark, [])[0]  # the empty result
 
     cand = blocks.filter(F.col("term").isin(all_terms))
     pw = (
@@ -377,16 +379,12 @@ def block_search(
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_topk(pdf, qterms, k, prune, pw)
 
-    local = cand.groupBy("bucket").applyInPandas(
-        per_bucket, "query_id int, doc_id long, score double"
-    )
-    # same Q7-tie-break window-limit merge as the row-postings path
-    from search_engine_spark.operators.query import topk
-
+    local = cand.groupBy("bucket").applyInPandas(per_bucket, _RESULT_SCHEMA)
     # round BEFORE the final window when comparing against a rounded
     # oracle, so sub-grain score differences tie and break on doc_id
     if round_dp is not None:
         local = local.withColumn("score", F.round(F.col("score"), round_dp))
+    # same Q7-tie-break window-limit merge as the row-postings path
     return topk(local, k)
 
 

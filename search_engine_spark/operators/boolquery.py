@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import score_bm25
+from search_engine_spark.operators.query import _term_table, score_bm25
 
 __all__ = ["parse_boolean", "boolean_search"]
 
@@ -189,18 +189,10 @@ def boolean_search(
         raise ValueError(node.op)
 
     survivors = ev(tree)
-    terms = _positive_terms(tree)
-    if terms:
-        qt = spark.createDataFrame(
-            [(0, t) for t in terms], "query_id int, term string"
-        )
-        scored = score_bm25(index, qt, k=2_147_483_647, terms=terms).select(
-            "doc_id", "score"
-        )
-    else:
-        scored = spark.createDataFrame([], "doc_id long, score double")
+    qt, terms = _term_table(spark, [(0, t) for t in _positive_terms(tree)])
+    scored = score_bm25(index, qt, k=2_147_483_647, terms=terms) if terms else qt
     return (
-        survivors.join(scored, "doc_id", "left")
+        survivors.join(scored.select("doc_id", "score"), "doc_id", "left")
         .select(
             F.lit(0).alias("query_id"),
             "doc_id",

@@ -409,16 +409,13 @@ def fused_bm25_pagerank(
     the (long, double) ranks relation before the top-k window. Same
     tie-break contract as the reference path (score DESC, doc_id ASC).
     """
-    from search_engine_spark.operators.query import _matched
+    from search_engine_spark.operators.query import _bm25_scored
 
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("bm")
-    )
+    scored = _bm25_scored(index, query_terms, terms)
     # LEFT join: a matched doc missing from the ranks relation (pruned
     # rank table, partial link graph) scores at bare BM25 (pr→0) — the
     # "never zeroes a match" contract
-    score = F.col("bm") * (
+    score = F.col("score") * (
         F.lit(1.0) + F.lit(float(n)) * F.coalesce(F.col("pr"), F.lit(0.0))
     )
     # round BEFORE the top-k window when a caller compares against a

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import _matched, topk
+from search_engine_spark.operators.query import _bm25_scored, _bm25_sum, _matched, topk
 
 __all__ = ["FEATURES", "ltr_features", "ltr_train", "ltr_rerank"]
 
@@ -56,7 +56,7 @@ def ltr_features(
         F.count_distinct("term").alias("n_q")
     )
     per = m.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), 6).alias("f_bm25"),
+        F.round(_bm25_sum(), 6).alias("f_bm25"),
         F.count(F.lit(1)).alias("n_matched"),
         F.sum("tf").cast("double").alias("f_tf"),
         F.round(F.max("bm25_idf"), 6).alias("f_idf"),
@@ -180,10 +180,7 @@ def hard_negatives(
     """
     from pyspark.sql import Window
 
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), 6).alias("score")
-    )
+    scored = _bm25_scored(index, query_terms, terms, round_dp=6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )

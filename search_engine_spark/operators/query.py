@@ -6,6 +6,19 @@ join pages (J2), per-page `SUM(tf_idf::real) * COUNT(term)` (A6), sort
 DESC limit 10 (W1). OR semantics (quirk Q9), f32 scores (Q5), tie-break
 (score DESC, doc_id ASC) defined by us (Q7).
 
+Every BM25-family operator is the same plan, spelled once:
+  `_term_table`   driver-side query terms → the (query_id, term[, weight])
+                  broadcast table + the literal term list; an empty term
+                  list returns the empty result before any index plan
+  `_bm25_scored`  `_matched` → one (query_id, doc_id) hash agg of
+                  Σ [weight·]idf·tf_norm, optionally rounded, optionally
+                  cut by a matched-term count (AND / minimum_should_match)
+  `topk`          the per-query rank-limit window
+A wrapper adds only its one distinguishing step between scorer and
+top-k (tombstone anti-join, shard window, cursor, prior, champion cut)
+or before the term table (spelling/wildcard/RM3/synonym rewrites). The
+three LM scorers share `_collection_probs`.
+
 Spark plan shape (multi-query batch):
   postings ⋈ BROADCAST(query_terms)        -- semi-restrict, no shuffle
            ⋈ BROADCAST(term_stats∩qterms)  -- tiny dim
@@ -21,11 +34,16 @@ so partition order cannot flip ranks; remaining ties are killed by Q7.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections import Counter
+from dataclasses import replace
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import tokenize_query
 from search_engine_spark.operators.index_build import InvertedIndex
+
+_RESULT_SCHEMA = "query_id int, doc_id long, score double"
 
 
 def queries_to_terms(
@@ -37,15 +55,45 @@ def queries_to_terms(
     `term = ANY(array)` + per-term rows means a term matched once per
     distinct term (app/main.py:67).
     """
+    qt, terms = _query_table(spark, queries)
+    if terms:
+        return qt
+    return qt.select("query_id", F.lit(None).cast("string").alias("term"))
+
+
+def _term_table(
+    spark: SparkSession, rows: list[tuple]
+) -> tuple[DataFrame, list[str]]:
+    """(qt, terms) from driver-side (query_id, term[, weight]) rows — the
+    one place a query-term table is built. A repeated row counts once
+    (a term matches once per query, app/main.py:67); `terms` lists the
+    distinct terms in first-seen order, the literal set `_matched`
+    pushes into the postings scan.
+
+    The empty guard: with no rows, `qt` is the empty (query_id, doc_id,
+    score) result and `terms` is [], so a wrapper returns `qt` without
+    planning anything against the index.
+    """
+    if not rows:
+        return spark.createDataFrame([], _RESULT_SCHEMA), []
+    rows = list(dict.fromkeys(rows))
+    weight = ", weight double" if len(rows[0]) == 3 else ""
+    qt = spark.createDataFrame(rows, "query_id int, term string" + weight)
+    return qt, list(dict.fromkeys(r[1] for r in rows))
+
+
+def _query_table(
+    spark: SparkSession, queries: dict[int, str] | list[str]
+) -> tuple[DataFrame, list[str]]:
+    """`_term_table` of a query batch (a list is numbered from 0). The
+    batch's terms come back sorted: across queries they have no order
+    of their own."""
     if isinstance(queries, list):
         queries = dict(enumerate(queries))
-    rows = []
-    for qid, q in queries.items():
-        for t in dict.fromkeys(tokenize_query(q)):  # order-preserving dedup
-            rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], "query_id int, term string")
-    return spark.createDataFrame(rows, "query_id int, term string")
+    qt, terms = _term_table(
+        spark, [(qid, t) for qid, q in queries.items() for t in tokenize_query(q)]
+    )
+    return qt, sorted(terms)
 
 
 def _matched(
@@ -109,6 +157,45 @@ def score_tfidf_compat(
     return topk(scored, k)
 
 
+def _bm25_sum() -> Column:
+    """Σ idf·tf_norm over one (query, doc) group of matched postings."""
+    return F.sum(F.col("bm25_idf") * F.col("tf_norm"))
+
+
+def _bm25_scored(
+    index: InvertedIndex,
+    qt: DataFrame,
+    terms: list[str] | None,
+    min_match: int | str | None = None,
+    round_dp: int | None = None,
+) -> DataFrame:
+    """Uncut (query_id, doc_id, score) BM25 rows — the one BM25 scorer:
+    `_matched` → one (query_id, doc_id) hash agg.
+
+    A `weight` column in `qt` scales each term's contribution to
+    weight·idf·tf_norm. `min_match` keeps docs matching at least that
+    many of their query's terms; "all" makes that each query's own term
+    count (conjunctive retrieval). Both are a filter on the per-doc
+    matched-term count after the agg — HERO's count predicate — so
+    they add no shuffle. `round_dp` rounds inside the agg, before any
+    cut, so sub-epsilon score twins tie and break on doc_id (Q7).
+    """
+    m = _matched(index, qt, terms)
+    if "weight" in qt.columns:
+        m = m.withColumn("bm25_idf", F.col("weight") * F.col("bm25_idf"))
+    score = _bm25_sum() if round_dp is None else F.round(_bm25_sum(), round_dp)
+    scored = m.groupBy("query_id", "doc_id").agg(
+        score.alias("score"), F.count(F.lit(1)).alias("n_matched")
+    )
+    if min_match == "all":
+        need = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_required"))
+        scored = scored.join(F.broadcast(need), "query_id")
+        min_match = F.col("n_required")
+    if min_match is not None:
+        scored = scored.filter(F.col("n_matched") >= min_match)
+    return scored.select("query_id", "doc_id", "score")
+
+
 def score_bm25(
     index: InvertedIndex,
     query_terms: DataFrame,
@@ -123,19 +210,8 @@ def score_bm25(
     their query (posting-list intersection as a post-agg filter against
     each query's term count — no extra shuffle; reference is OR-only,
     SURVEY §2.6/Q9)."""
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("score"),
-        F.count(F.lit(1)).alias("n_matched"),
-    )
-    if mode == "and":
-        need = query_terms.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("n_required")
-        )
-        scored = scored.join(F.broadcast(need), "query_id").filter(
-            F.col("n_matched") == F.col("n_required")
-        ).drop("n_required")
-    return topk(scored.drop("n_matched"), k)
+    min_match = "all" if mode == "and" else None
+    return topk(_bm25_scored(index, query_terms, terms, min_match), k)
 
 
 def search(
@@ -146,15 +222,9 @@ def search(
     scorer: str = "bm25",
 ) -> DataFrame:
     """End-to-end multi-query search → (query_id, doc_id, score) top-k rows."""
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    # terms are already known driver-side — no collect job needed
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_table(spark, queries)
     if not terms:
-        return qt.sparkSession.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
+        return qt
     if scorer == "bm25":
         return score_bm25(index, qt, k, terms=terms)
     if scorer == "tfidf_compat":
@@ -339,20 +409,18 @@ def fuzzy_search(
         index, query_terms, max_dist=max_dist, prefix_len=prefix_len,
         max_expansions=max_expansions,
     ).collect()  # ≤ |q|·max_expansions scalars — the expansion barrier
-    if not exp:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    terms = sorted({r["term"] for r in exp})
+    qt, terms = _term_table(spark, [(0, r["term"]) for r in exp])
+    if not terms:
+        return qt
     edf = F.broadcast(
         spark.createDataFrame(
-            [(0, r["q"], r["term"], float(r["boost"])) for r in exp],
-            "query_id int, q string, term string, boost double",
+            [(r["q"], r["term"], float(r["boost"])) for r in exp],
+            "q string, term string, boost double",
         )
     )
-    m = _matched(index, edf.select("query_id", "term").distinct(), terms=terms)
     per_qterm = (
-        m.join(edf, ["query_id", "term"])
+        _matched(index, qt, sorted(terms))
+        .join(edf, "term")
         .groupBy("query_id", "q", "doc_id")
         .agg(
             F.max(
@@ -442,11 +510,14 @@ def explain_score(
     scan) further restricted by the doc_id isin — a few rows survive;
     no aggregation at all, pure per-row column math."""
     spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset).filter(
+    qt, terms = _term_table(spark, [(0, t) for t in query_terms])
+    if not terms:
+        return spark.createDataFrame(
+            [],
+            "doc_id long, term string, tf long, df long, idf double,"
+            " tf_norm double, contribution double",
+        )
+    m = _matched(index, qt, terms).filter(
         F.col("doc_id").isin([int(d) for d in doc_ids])
     )
     return m.select(
@@ -484,21 +555,13 @@ def tombstone_search(
     anti-join — deletes cost nothing at scan time. Top-k is cut after
     exclusion, so a page stays full while any matches remain.
     """
-    spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    alive = scored.join(
+    qt, terms = _term_table(index.postings.sparkSession, [(0, t) for t in query_terms])
+    if not terms:
+        return qt
+    alive = _bm25_scored(index, qt, terms, round_dp=round_dp).join(
         F.broadcast(deleted_ids.select("doc_id")), "doc_id", "left_anti"
     )
-    return topk(alive, k)
+    return topk(alive.select("query_id", "doc_id", "score"), k)
 
 
 def sharded_search(
@@ -525,17 +588,12 @@ def sharded_search(
     live; here both stages are one job, which is the point of
     expressing topology as a plan property instead of RPC code.
     """
-    spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
+    qt, terms = _term_table(index.postings.sparkSession, [(0, t) for t in query_terms])
+    if not terms:
+        return qt
+    scored = _bm25_scored(index, qt, terms, round_dp=round_dp).withColumn(
+        "shard", F.pmod(F.col("doc_id"), F.lit(n_shards))
     )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    ).withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
     w_local = Window.partitionBy("query_id", "shard").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -611,24 +669,43 @@ def corrected_search(
     as the RM3/fuzzy expansion collects); the corrected probe is the
     plain dictionary-seek search plan. Scores rounded before the cut.
     """
-    spark = index.postings.sparkSession
-    sugg = {
-        r["term"]: r["suggestion"]
-        for r in did_you_mean(index, query_terms, max_dist=max_dist).collect()
-    }
-    fixed = list(
-        dict.fromkeys(sugg.get(t, t) for t in query_terms)
+    fixes = (
+        did_you_mean(index, query_terms, max_dist=max_dist).collect()
+        if query_terms
+        else []
     )
-    qt = spark.createDataFrame(
-        [(0, t) for t in fixed], "query_id int, term string"
+    sugg = {r["term"]: r["suggestion"] for r in fixes}
+    qt, terms = _term_table(
+        index.postings.sparkSession, [(0, sugg.get(t, t)) for t in query_terms]
     )
-    m = _matched(index, qt, terms=fixed)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
+    if not terms:
+        return qt
+    return topk(_bm25_scored(index, qt, terms, round_dp=round_dp), k)
+
+
+def _collection_probs(
+    index: InvertedIndex, query_terms: DataFrame, terms: list[str] | None
+) -> DataFrame:
+    """(term, p_c): p(t|C) = cf_t / |C| for the query terms — the
+    collection model the three LM scorers smooth against."""
+    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    # p(t|C) is a CORPUS constant — compute it from the (isin-pruned)
+    # postings themselves, NOT from _matched: that has one row per
+    # (query, posting), so a term shared by multiple batch queries
+    # would double its collection frequency there
+    cf_src = index.postings
+    if terms:
+        cf_src = cf_src.filter(F.col("term").isin(terms))
+    cf_src = cf_src.join(
+        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
     )
-    return topk(scored, k)
+    return (
+        cf_src.select("term", "tf")
+        .groupBy("term")
+        .agg(F.sum("tf").alias("cf"))
+        .withColumn("p_c", F.col("cf").cast("double") / F.lit(float(total_tokens)))
+        .select("term", "p_c")
+    )
 
 
 def score_lm_dirichlet(
@@ -669,28 +746,11 @@ def _lm_dirichlet_scored(
 ) -> DataFrame:
     """Uncut LM-Dirichlet scores (see score_lm_dirichlet) — shared by
     the top-k path and the rescore window."""
-    spark = index.postings.sparkSession
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    p_c = _collection_probs(index, query_terms, terms)
     m = _matched(index, query_terms, terms)
-    # p(t|C) is a CORPUS constant — compute it from the (isin-pruned)
-    # postings themselves, NOT from m: _matched has one row per
-    # (query, posting), so a term shared by multiple batch queries
-    # would double its collection frequency there
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn("p_c", F.col("cf").cast("double") / F.lit(float(total_tokens)))
-    )
     nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
     matched_part = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        m.join(F.broadcast(p_c), "term")
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum(
@@ -701,7 +761,7 @@ def _lm_dirichlet_scored(
             ).alias("s_matched")
         )
     )
-    scored = (
+    return (
         matched_part.join(index.doc_stats, "doc_id")
         .join(F.broadcast(nq), "query_id")
         .select(
@@ -715,7 +775,6 @@ def _lm_dirichlet_scored(
             ).alias("score"),
         )
     )
-    return scored
 
 
 def score_jelinek_mercer(
@@ -740,24 +799,10 @@ def score_jelinek_mercer(
     collection probabilities from the isin-pruned postings. Rounded
     9dp for oracle comparison; ties Q7.
     """
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    p_c = _collection_probs(index, query_terms, terms)
     m = _matched(index, query_terms, terms)
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn(
-            "p_c", F.col("cf").cast("double") / F.lit(float(total_tokens))
-        )
-    )
     scored = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        m.join(F.broadcast(p_c), "term")
         .join(index.doc_stats, "doc_id")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -801,22 +846,8 @@ def score_absolute_discount(
     at build time it would live in doc_stats). Same probe plan as the
     other two LM scorers; rounded 9dp; ties Q7.
     """
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    p_c = _collection_probs(index, query_terms, terms)
     m = _matched(index, query_terms, terms)
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn(
-            "p_c", F.col("cf").cast("double") / F.lit(float(total_tokens))
-        )
-    )
     # |d|_u: distinct terms per doc — real postings only (tf > 0)
     du = (
         index.postings.filter(F.col("tf") > 0)
@@ -825,7 +856,7 @@ def score_absolute_discount(
     )
     nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
     matched_part = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        m.join(F.broadcast(p_c), "term")
         .join(du, "doc_id")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -1015,12 +1046,7 @@ def top_hits_by_facet(
     and it is cut to n·|buckets| rows partition-locally. Scores are
     rounded BEFORE the cut so tie-breaks are reproducible across plans.
     """
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    scored = _bm25_scored(index, query_terms, terms, round_dp=round_dp)
     dim = dims.select("doc_id", F.col(facet).alias("facet"))
     w = Window.partitionBy("query_id", "facet").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
@@ -1084,12 +1110,7 @@ def significant_terms(
     relation is never shuffled on doc_id). Scores are rounded before
     the per-query top-terms cut; ties break on term ASC.
     """
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    scored = _bm25_scored(index, query_terms, terms, round_dp=round_dp)
     hits = topk(scored, k_hits).select("query_id", "doc_id")
     fg_size = hits.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("fg_size")
@@ -1145,28 +1166,22 @@ def rescore_topk(
     LM-Dirichlet second pass re-ranks ONLY that window with
     score = w_base·bm25 + w_rescore·lm (beyond-reference serving).
 
-    This is the standard serving trade at scale: the first pass is the
-    broadcast-matched one-agg BM25 (postings never shuffled); the
-    second pass touches window·|queries| rows, so its cost is constant
-    in corpus size. The window cut uses rounded scores + the Q7
-    tie-break so the candidate set is reproducible across plans; docs
-    outside the window never re-enter (k ≤ window is enforced).
+    The first pass is the broadcast-matched one-agg BM25 (postings
+    never shuffled). The second pass is NOT confined to the window: it
+    scores every matched doc with LM-Dirichlet (its own hash agg plus a
+    sort-merge join of doc_stats) and only its join to the window cuts
+    it to window·|queries| rows, so its cost grows with the matched
+    postings like the first pass. The window cut uses rounded scores +
+    the Q7 tie-break so the candidate set is reproducible across plans;
+    docs outside the window never re-enter (k ≤ window is enforced).
     """
     if k > window:
         raise ValueError(f"k ({k}) must be <= window ({window})")
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_table(spark, queries)
     if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    m = _matched(index, qt, terms)
-    base = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("base")
+        return qt
+    base = _bm25_scored(index, qt, terms, round_dp=round_dp).withColumnRenamed(
+        "score", "base"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("base").desc(), F.col("doc_id").asc()
@@ -1314,16 +1329,12 @@ def wildcard_search(
     scoring pass. An empty expansion short-circuits to an empty result
     without touching postings.
     """
-    terms = [r["term"] for r in wildcard_terms(
+    exp = wildcard_terms(
         index, pattern, kgram=kgram, max_expansions=max_expansions
-    ).collect()]
+    ).collect()
+    qt, terms = _term_table(spark, [(0, r["term"]) for r in exp])
     if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    qt = spark.createDataFrame(
-        [(0, t) for t in terms], "query_id int, term string"
-    )
+        return qt
     return score_bm25(index, qt, k=k, terms=terms)
 
 
@@ -1462,25 +1473,18 @@ def rm3_expand(
     crushes high-df expansion terms.
     """
     spark = docs.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
+    qt, qset = _term_table(spark, [(0, t) for t in query_terms])
+    if not qset:
+        return spark.createDataFrame([], "term string, weight double")
+    # rounded inside the agg, BEFORE the cut (r3 advice: an unrounded
+    # cut can rank sub-1e-6 score twins differently from the replay)
     pass1 = (
-        m.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-            ).alias("s")
-        )
-        # round BEFORE the cut (r3 advice: an unrounded cut can rank
-        # sub-1e-6 score twins differently from the replay)
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
+        _bm25_scored(index, qt, qset, round_dp=round_dp)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(fb_docs)
     )
     fb = pass1.collect()  # ≤ fb_docs scalars — the PRF barrier
-    total = sum(r["s"] for r in fb)
+    total = sum(r["score"] for r in fb)
     pq_w = (1.0 - alpha) / len(qset)
     orig = spark.createDataFrame([(t, pq_w) for t in qset], "term string, pq double")
     if not fb or total <= 0.0:
@@ -1492,7 +1496,7 @@ def rm3_expand(
     wd = spark.createDataFrame(
         # round_half_up, not builtin round: the oracle's round(s/t, 9)
         # is HALF_UP and Python's builtin is HALF_EVEN (numerics.py)
-        [(int(r["doc_id"]), round_half_up(r["s"] / total, 9)) for r in fb],
+        [(int(r["doc_id"]), round_half_up(r["score"] / total, 9)) for r in fb],
         "doc_id long, w double",
     )
     ids = [int(r["doc_id"]) for r in fb]
@@ -1545,24 +1549,12 @@ def rm3_search(
         index, docs, query_terms, tokenizer,
         fb_docs=fb_docs, fb_terms=fb_terms, alpha=alpha, round_dp=round_dp,
     ).collect()
-    spark = docs.sparkSession
-    terms = [r["term"] for r in exp]
-    wdf = spark.createDataFrame(
-        [(0, r["term"], float(r["weight"])) for r in exp],
-        "query_id int, term string, weight double",
+    qt, terms = _term_table(
+        docs.sparkSession, [(0, r["term"], float(r["weight"])) for r in exp]
     )
-    m = _matched(index, wdf.select("query_id", "term"), terms=terms)
-    scored = (
-        m.join(F.broadcast(wdf.select("term", "weight")), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("weight") * F.col("bm25_idf") * F.col("tf_norm")),
-                round_dp,
-            ).alias("score")
-        )
-    )
-    return topk(scored, k)
+    if not terms:
+        return qt
+    return topk(_bm25_scored(index, qt, terms, round_dp=round_dp), k)
 
 
 def search_after(
@@ -1589,17 +1581,10 @@ def search_after(
     cut — the cursor replays exactly across pages and engines (the same
     sub-epsilon-twin hazard the r3 advice flagged for unrounded cuts).
     """
-    spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    qt, terms = _term_table(index.postings.sparkSession, [(0, t) for t in query_terms])
+    if not terms:
+        return qt
+    scored = _bm25_scored(index, qt, terms, round_dp=round_dp)
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
         scored = scored.filter(
@@ -1666,25 +1651,12 @@ def champion_search(
     before scoring. Score rounded to round_dp BEFORE the top-k window
     so near-ties replay identically in oracles.
     """
-    qt = queries_to_terms(spark, queries)
-    terms = [r["term"] for r in qt.select("term").distinct().collect()]
-    champ = champion_postings(
-        InvertedIndex(
-            postings=index.postings.filter(F.col("term").isin(terms)),
-            term_stats=index.term_stats,
-            doc_stats=index.doc_stats,
-            n_docs=index.n_docs,
-            avgdl=index.avgdl,
-        ),
-        m=m,
-    )
-    mt = _matched(champ, qt, terms=terms)
-    scored = mt.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    return topk(scored, k)
+    qt, terms = _query_table(spark, queries)
+    if not terms:
+        return qt
+    pruned = replace(index, postings=index.postings.filter(F.col("term").isin(terms)))
+    champ = champion_postings(pruned, m=m)
+    return topk(_bm25_scored(champ, qt, terms, round_dp=round_dp), k)
 
 
 def tiered_search(
@@ -1711,30 +1683,19 @@ def tiered_search(
     if isinstance(queries, list):
         queries = dict(enumerate(queries))
     tier1 = champion_search(index, spark, queries, m=m, k=k, round_dp=round_dp)
-    filled = {qid: 0 for qid in queries}
     t1_rows = tier1.collect()
-    for r in t1_rows:
-        filled[r["query_id"]] += 1
+    filled = Counter(r["query_id"] for r in t1_rows)
     refill = {qid: q for qid, q in queries.items() if filled[qid] < k}
-    if not refill:
+    qt, terms = _query_table(spark, refill)
+    if not terms:  # no under-filled query has a term to re-run
         return tier1
-    qt = queries_to_terms(spark, refill)
-    terms = [r["term"] for r in qt.select("term").distinct().collect()]
-    mt = _matched(index, qt, terms=terms)
-    full_scored = mt.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    tier2 = topk(full_scored, k)
+    tier2 = topk(_bm25_scored(index, qt, terms, round_dp=round_dp), k)
     kept = [
         (r["query_id"], r["doc_id"], float(r["score"]))
         for r in t1_rows
         if r["query_id"] not in refill
     ]
-    kept_df = spark.createDataFrame(
-        kept, "query_id int, doc_id long, score double"
-    )
+    kept_df = spark.createDataFrame(kept, _RESULT_SCHEMA)
     return kept_df.unionByName(tier2).orderBy(
         "query_id", F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -1759,25 +1720,10 @@ def msm_search(
     shrinks the top-k window input — at 100 TB the filter drops the
     long tail of 1-term matches before the per-query rank window.
     """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_table(spark, queries)
     if not terms:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    m = _matched(index, qt, terms)
-    scored = (
-        m.groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp).alias(
-                "score"
-            ),
-            F.count(F.lit(1)).alias("n_matched"),
-        )
-        .filter(F.col("n_matched") >= min_should_match)
-        .drop("n_matched")
-    )
-    return topk(scored, k)
+        return qt
+    return topk(_bm25_scored(index, qt, terms, min_should_match, round_dp), k)
 
 
 def synonym_search(
@@ -1806,26 +1752,15 @@ def synonym_search(
         queries = dict(enumerate(queries))
     rows: list[tuple[int, str, float]] = []
     for qid, q in queries.items():
-        weights: dict[str, float] = {}
-        originals = list(dict.fromkeys(tokenize_query(q)))
-        for t in originals:
-            weights[t] = 1.0
-        for t in originals:
+        weights = dict.fromkeys(tokenize_query(q), 1.0)
+        for t in list(weights):
             for s in synonyms.get(t, []):
                 weights[s] = max(weights.get(s, 0.0), syn_weight)
-        for term, w in weights.items():
-            rows.append((qid, term, w))
-    if not rows:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    qt = spark.createDataFrame(rows, "query_id int, term string, weight double")
-    terms = sorted({r[1] for r in rows})
-    m = _matched(index, qt, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("weight") * F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    return topk(scored, k)
+        rows += [(qid, term, w) for term, w in weights.items()]
+    qt, terms = _term_table(spark, rows)
+    if not terms:
+        return qt
+    return topk(_bm25_scored(index, qt, sorted(terms), round_dp=round_dp), k)
 
 
 def decay_search(
@@ -1850,21 +1785,15 @@ def decay_search(
     query-time form for priors that change faster than the index
     (freshness does; PageRank doesn't).
     """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_table(spark, queries)
     if not terms:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    m = _matched(index, qt, terms)
-    relevance = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("relevance")
-    )
+        return qt
+    relevance = _bm25_scored(index, qt, terms)
     decayed = relevance.join(doc_ages, "doc_id").select(
         "query_id",
         "doc_id",
         F.round(
-            F.col("relevance")
+            F.col("score")
             * F.pow(F.lit(0.5), F.col("age_days") / F.lit(float(half_life))),
             round_dp,
         ).alias("score"),

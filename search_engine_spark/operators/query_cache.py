@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import search
+from search_engine_spark.operators.query import _term_table, search
 
 __all__ = ["query_fingerprint", "cached_search"]
 
@@ -116,9 +116,7 @@ def cached_search(
         )
         parts.append(hits)
     if not parts:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
+        return _term_table(spark, [])[0]  # the empty result
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

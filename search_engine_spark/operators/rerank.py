@@ -34,7 +34,7 @@ from search_engine_spark.operators.index_build import (
     InvertedIndex,
     raw_postings_from_docs,
 )
-from search_engine_spark.operators.query import _matched
+from search_engine_spark.operators.query import _bm25_scored, _term_table
 
 
 def candidate_jaccard_pairs(
@@ -98,23 +98,16 @@ def mmr_rerank(
     not a relevance score.
     """
     spark = docs.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
+    qt, terms = _term_table(spark, [(0, t) for t in query_terms])
     cand_rows = (
-        m.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-            ).alias("rel")
-        )
-        .orderBy(F.col("rel").desc(), F.col("doc_id").asc())
+        _bm25_scored(index, qt, terms, round_dp=round_dp)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(n_candidates)
         .collect()
+        if terms
+        else []
     )
-    rel = {int(r["doc_id"]): float(r["rel"]) for r in cand_rows}
+    rel = {int(r["doc_id"]): float(r["score"]) for r in cand_rows}
     sim: dict[tuple[int, int], float] = {}
     if len(rel) > 1:
         for r in candidate_jaccard_pairs(

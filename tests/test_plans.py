@@ -500,15 +500,28 @@ def test_forward_index_probe_prunes_on_doc_id(spark, tmp_path):
 
 
 def test_serving_extras_keep_the_bm25_plan_shape(spark, stored_index):
-    """msm_search / synonym_search add zero shuffles over score_bm25:
-    same broadcast dictionary-seek, same pushed In(term) predicate."""
-    from search_engine_spark.operators.query import msm_search, synonym_search
+    """msm_search / synonym_search and the other BM25 wrappers add zero
+    shuffles over score_bm25: same broadcast dictionary-seek, same
+    pushed In(term) predicate."""
+    from search_engine_spark.operators import query as Q
 
     _, idx = stored_index
     q = {0: "hippopotamus ladder"}
+    terms = ["hippopotamus", "ladder"]
+    gone = spark.createDataFrame([(1,)], "doc_id long")
     for df in (
-        msm_search(idx, spark, q, k=10, min_should_match=2),
-        synonym_search(idx, spark, q, {"ladder": ["hippopotamus"]}, k=10),
+        Q.msm_search(idx, spark, q, k=10, min_should_match=2),
+        Q.synonym_search(idx, spark, q, {"ladder": ["hippopotamus"]}, k=10),
+        Q.score_bm25(idx, queries_to_terms(spark, q), k=10, terms=terms, mode="and"),
+        Q.tombstone_search(idx, gone, terms, k=10),
+        Q.sharded_search(idx, terms, n_shards=3, k=10),
+        Q.corrected_search(idx, terms, k=10),
+        Q.search_after(idx, terms, k=5, after=(1.0, 5)),
+        Q.champion_search(idx, spark, q, m=4, k=10),
+        Q.tiered_search(idx, spark, q, m=4, k=10),
+        Q.fuzzy_search(idx, terms, k=10),
+        # "caf*" expands to >= 2 terms: a single term would push EqualTo
+        Q.wildcard_search(idx, spark, "caf*", k=10),
     ):
         plan = _plan(df)
         assert "BroadcastHashJoin" in plan
