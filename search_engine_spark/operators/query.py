@@ -8,22 +8,27 @@ DESC limit 10 (W1). OR semantics (quirk Q9), f32 scores (Q5), tie-break
 
 Every BM25-family operator is the same plan, spelled once:
   `_term_table`   driver-side query terms → the (query_id, term[, weight])
-                  broadcast table + the literal term list; an empty term
-                  list returns the empty result before any index plan
+                  broadcast table (a `local_table`) + the literal term
+                  list; an empty term list returns the empty result
+                  before any index plan
   `_bm25_scored`  `_matched` → one (query_id, doc_id) hash agg of
                   Σ [weight·]idf·tf_norm, optionally rounded, optionally
                   cut by a matched-term count (AND / minimum_should_match)
-  `topk`          the per-query rank-limit window
+  `topk`          the per-query rank-limit window + one-partition sort
 A wrapper adds only its one distinguishing step between scorer and
 top-k (tombstone anti-join, shard window, cursor, prior, champion cut)
 or before the term table (spelling/wildcard/RM3/synonym rewrites). The
-three LM scorers share `_collection_probs`.
+three LM scorers share `_collection_probs`. Every driver-side table
+here is a `session.local_table`, so it plans as a JVM LocalTableScan.
 
 Spark plan shape (multi-query batch):
-  postings ⋈ BROADCAST(query_terms)        -- semi-restrict, no shuffle
-           ⋈ BROADCAST(term_stats∩qterms)  -- tiny dim
-  → groupBy(query_id, doc_id) hash agg     -- the one shuffle
+  postings[In(term)] ⋈ BROADCAST(query_terms)  -- a LocalTableScan
+                     ⋈ BROADCAST(term_stats[In(term)])
+                                     -- tiny dim; no semi-join when
+                                        the term list is known
+  → groupBy(query_id, doc_id) hash agg     -- the one wide shuffle
   → per-query top-k window (rank pushdown via WindowGroupLimit)
+  → one-partition sort of the ≤ k rows per query (no range exchange)
 
 Float determinism contract (shared with oracle/oracle.py): per-term
 score is computed in f64 (compat: per-term value rounded to f32 first),
@@ -42,6 +47,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import tokenize_query
 from search_engine_spark.operators.index_build import InvertedIndex
+from search_engine_spark.session import local_table
 
 _RESULT_SCHEMA = "query_id int, doc_id long, score double"
 
@@ -75,10 +81,10 @@ def _term_table(
     planning anything against the index.
     """
     if not rows:
-        return spark.createDataFrame([], _RESULT_SCHEMA), []
+        return local_table(spark, [], _RESULT_SCHEMA), []
     rows = list(dict.fromkeys(rows))
     weight = ", weight double" if len(rows[0]) == 3 else ""
-    qt = spark.createDataFrame(rows, "query_id int, term string" + weight)
+    qt = local_table(spark, rows, "query_id int, term string" + weight)
     return qt, list(dict.fromkeys(r[1] for r in rows))
 
 
@@ -102,35 +108,47 @@ def _matched(
     """postings restricted to query terms, with term stats attached.
 
     Both join sides against postings are broadcast: the query-term set
-    (a few rows) and term_stats∩qterms (≤ #query terms rows). The big
-    postings relation is never shuffled here. When the literal term set
-    is known driver-side (it always is — queries are tokenized on the
-    driver), an `isin` predicate is ALSO applied so Catalyst pushes it
+    (a few rows; a `LocalTableScan` when built by `_term_table`) and
+    term_stats∩qterms (≤ #query terms rows). The big postings relation
+    is never shuffled here. When the literal term set is known
+    driver-side (it always is — queries are tokenized on the driver),
+    an `isin` predicate is applied to both scans, so Catalyst pushes it
     into the parquet scan (`PushedFilters: In(term, ...)`): with the
     index laid out sorted-by-term, row-group stats skip everything but
     the touched posting lists — the Spark analog of a term-dictionary
     seek, and the difference between O(index) and O(matched postings)
-    IO at 10^12-doc scale.
+    IO at 10^12-doc scale. The filtered term_stats is already the small
+    broadcast side, so there is no semi-join against the query terms;
+    only `terms=None` restricts term_stats with a left-semi join.
     """
-    qt = F.broadcast(query_terms)
     postings, term_stats = index.postings, index.term_stats
     if terms:
         postings = postings.filter(F.col("term").isin(terms))
         term_stats = term_stats.filter(F.col("term").isin(terms))
-    ts_q = term_stats.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
+    else:
+        term_stats = term_stats.join(
+            F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
+        )
+    return postings.join(F.broadcast(query_terms), "term").join(
+        F.broadcast(term_stats), "term"
     )
-    return postings.join(qt, "term").join(F.broadcast(ts_q), "term")
 
 
 def topk(scored: DataFrame, k: int = 10) -> DataFrame:
     """Per-query top-k, tie-break (score DESC, doc_id ASC) — quirk Q7.
 
     rank-limit window: Spark's WindowGroupLimit pushes the k-filter into
-    a per-partition group-limit before the final sort, i.e. the
-    distributed top-k heap merge of TakeOrderedAndProject generalized
-    per query_id.
+    a per-partition group-limit before the window, i.e. the distributed
+    top-k heap merge of TakeOrderedAndProject generalized per query_id.
+    The tail is `_in_result_order`: at most k rows per query remain, so
+    they are sorted in one partition — no range-partition exchange and
+    no sampling job for its bounds.
     """
+    return _in_result_order(_rank_cut(scored, k))
+
+
+def _rank_cut(scored: DataFrame, k: int) -> DataFrame:
+    """The k best rows of each query, unordered (topk without its tail)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -138,7 +156,14 @@ def topk(scored: DataFrame, k: int = 10) -> DataFrame:
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .drop("rn")
-        .orderBy("query_id", F.col("score").desc(), F.col("doc_id").asc())
+    )
+
+
+def _in_result_order(rows: DataFrame) -> DataFrame:
+    """Top-k rows in one partition, sorted (query_id, score DESC, doc_id
+    ASC) — the result order of every top-k operator, spelled once."""
+    return rows.repartition(1).sortWithinPartitions(
+        "query_id", F.col("score").desc(), F.col("doc_id").asc()
     )
 
 
@@ -288,12 +313,10 @@ def did_you_mean(
     }
     missing = [t for t in terms if t not in present]
     if not missing:
-        return spark.createDataFrame(
-            [], "term string, suggestion string, dist int, df long"
+        return local_table(
+            spark, [], "term string, suggestion string, dist int, df long"
         )
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in missing], "q string")
-    )
+    qt = F.broadcast(local_table(spark, [(t,) for t in missing], "q string"))
     cand = (
         index.term_stats.select("term", "df")
         .crossJoin(qt)
@@ -343,9 +366,7 @@ def fuzzy_expand(
     """
     spark = index.term_stats.sparkSession
     qset = list(dict.fromkeys(terms))
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in qset], "q string")
-    )
+    qt = F.broadcast(local_table(spark, [(t,) for t in qset], "q string"))
     cand = (
         index.term_stats.select("term", "df")
         .crossJoin(qt)
@@ -405,6 +426,8 @@ def fuzzy_search(
     matched rows only.
     """
     spark = index.term_stats.sparkSession
+    if not query_terms:
+        return local_table(spark, [], _RESULT_SCHEMA)
     exp = fuzzy_expand(
         index, query_terms, max_dist=max_dist, prefix_len=prefix_len,
         max_expansions=max_expansions,
@@ -413,7 +436,8 @@ def fuzzy_search(
     if not terms:
         return qt
     edf = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(r["q"], r["term"], float(r["boost"])) for r in exp],
             "q string, term string, boost double",
         )
@@ -512,7 +536,8 @@ def explain_score(
     spark = index.postings.sparkSession
     qt, terms = _term_table(spark, [(0, t) for t in query_terms])
     if not terms:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             "doc_id long, term string, tf long, df long, idf double,"
             " tf_norm double, contribution double",
@@ -1475,7 +1500,7 @@ def rm3_expand(
     spark = docs.sparkSession
     qt, qset = _term_table(spark, [(0, t) for t in query_terms])
     if not qset:
-        return spark.createDataFrame([], "term string, weight double")
+        return local_table(spark, [], "term string, weight double")
     # rounded inside the agg, BEFORE the cut (r3 advice: an unrounded
     # cut can rank sub-1e-6 score twins differently from the replay)
     pass1 = (
@@ -1486,14 +1511,15 @@ def rm3_expand(
     fb = pass1.collect()  # ≤ fb_docs scalars — the PRF barrier
     total = sum(r["score"] for r in fb)
     pq_w = (1.0 - alpha) / len(qset)
-    orig = spark.createDataFrame([(t, pq_w) for t in qset], "term string, pq double")
+    orig = local_table(spark, [(t, pq_w) for t in qset], "term string, pq double")
     if not fb or total <= 0.0:
         return orig.select(
             "term", F.round(F.col("pq"), round_dp).alias("weight")
         ).orderBy(F.col("weight").desc(), F.col("term").asc()).limit(fb_terms)
     from search_engine_spark.numerics import round_half_up
 
-    wd = spark.createDataFrame(
+    wd = local_table(
+        spark,
         # round_half_up, not builtin round: the oracle's round(s/t, 9)
         # is HALF_UP and Python's builtin is HALF_EVEN (numerics.py)
         [(int(r["doc_id"]), round_half_up(r["score"] / total, 9)) for r in fb],
@@ -1689,16 +1715,14 @@ def tiered_search(
     qt, terms = _query_table(spark, refill)
     if not terms:  # no under-filled query has a term to re-run
         return tier1
-    tier2 = topk(_bm25_scored(index, qt, terms, round_dp=round_dp), k)
+    tier2 = _rank_cut(_bm25_scored(index, qt, terms, round_dp=round_dp), k)
     kept = [
         (r["query_id"], r["doc_id"], float(r["score"]))
         for r in t1_rows
         if r["query_id"] not in refill
     ]
-    kept_df = spark.createDataFrame(kept, _RESULT_SCHEMA)
-    return kept_df.unionByName(tier2).orderBy(
-        "query_id", F.col("score").desc(), F.col("doc_id").asc()
-    )
+    kept_df = local_table(spark, kept, _RESULT_SCHEMA)
+    return _in_result_order(kept_df.unionByName(tier2))
 
 
 def msm_search(

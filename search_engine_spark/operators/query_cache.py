@@ -38,7 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import _term_table, search
+from search_engine_spark.operators.query import (
+    _in_result_order,
+    _term_table,
+    search,
+)
+from search_engine_spark.session import local_table
 
 __all__ = ["query_fingerprint", "cached_search"]
 
@@ -79,8 +84,8 @@ def cached_search(
         qid: query_fingerprint(q, scorer, k, index_epoch)
         for qid, q in queries.items()
     }
-    fp_df = spark.createDataFrame(
-        [(qid, fp) for qid, fp in fps.items()], "query_id int, qfp string"
+    fp_df = local_table(
+        spark, [(qid, fp) for qid, fp in fps.items()], "query_id int, qfp string"
     )
     try:
         spark.catalog.refreshByPath(cache_path)
@@ -120,6 +125,4 @@ def cached_search(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy(
-        "query_id", F.col("score").desc(), F.col("doc_id").asc()
-    )
+    return _in_result_order(out)

@@ -35,6 +35,7 @@ from search_engine_spark.operators.index_build import (
     raw_postings_from_docs,
 )
 from search_engine_spark.operators.query import _bm25_scored, _term_table
+from search_engine_spark.session import local_table
 
 
 def candidate_jaccard_pairs(
@@ -129,9 +130,7 @@ def mmr_rerank(
                 best = (d, obj)
         picked.append((len(picked) + 1, best[0], best[1]))
         remaining.discard(best[0])
-    return spark.createDataFrame(
-        picked, "rank int, doc_id long, score double"
-    )
+    return local_table(spark, picked, "rank int, doc_id long, score double")
 
 
 def rrf_fuse(

@@ -10,13 +10,19 @@ scaled down for local testing:
 - Broadcast threshold left at default: our small dims (term_stats for a
   query's terms, the query-term set itself) are tiny and broadcast
   explicitly with ``F.broadcast``.
+
+Driver-side tables on the query path (query terms, expansion lists,
+collected top-k rows) are built with ``local_table``, which Spark plans
+as a JVM local relation rather than an RDD scan.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -56,3 +62,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_schemas(ddl: str):
+    """(StructType, Arrow schema) of a DDL string, parsed once: the
+    parse is a JVM round trip."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A DataFrame of driver-side `rows` (tuples in `ddl` column order)
+    that Spark plans as a JVM `LocalRelation` (`LocalTableScan`).
+
+    `createDataFrame(list, ddl)` plans a `LogicalRDD` instead (`Scan
+    ExistingRDD`): every action that reads it — the broadcast of a
+    three-row query-term table included — runs an extra Spark job over
+    the pickled rows. Going through a `pyarrow.Table` ships the rows to
+    the JVM once, at creation, and the planner sees their size and
+    contents. Empty `rows` give an empty `LocalTableScan`.
+    """
+    import pyarrow as pa
+
+    struct, schema = _ddl_schemas(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    return spark.createDataFrame(table, struct)

@@ -529,6 +529,38 @@ def test_serving_extras_keep_the_bm25_plan_shape(spark, stored_index):
         assert "In(term" in plan, plan[:2000]
 
 
+def test_query_plans_scan_local_tables_and_end_in_one_partition(spark, stored_index):
+    """The per-query constant: the query-term table is a JVM
+    LocalTableScan, not an RDD scan (`Scan ExistingRDD` costs a job per
+    broadcast); with the term list known, term_stats is cut by the
+    pushed In(term) alone (no LeftSemi join against the query terms);
+    and topk's tail is a one-partition sort, not a range-partition
+    exchange with its sampling job."""
+    from search_engine_spark.operators import query as Q
+    from search_engine_spark.session import local_table
+
+    _, idx = stored_index
+    q = {0: "hippopotamus ladder"}
+    gone = local_table(spark, [(1,)], "doc_id long")
+    for df in (
+        Q.search(idx, spark, q, k=10),
+        Q.search(idx, spark, q, k=10, scorer="tfidf_compat"),
+        Q.tombstone_search(idx, gone, ["hippopotamus", "ladder"], k=10),
+    ):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, plan[:3000]
+        assert "Scan ExistingRDD" not in plan, plan[:3000]
+        assert "LeftSemi" not in plan, plan[:3000]
+    scored = idx.postings.select(
+        (F.col("doc_id") % 3).cast("int").alias("query_id"),
+        "doc_id",
+        F.col("tf_norm").alias("score"),
+    )
+    plan = _plan(Q.topk(scored, k=5))
+    assert "rangepartitioning" not in plan, plan[:3000]
+    assert "WindowGroupLimit" in plan, plan[:3000]
+
+
 def test_decay_search_pushes_term_filter(spark, stored_index):
     """decay_search's extra ages join happens AFTER the per-doc
     aggregate (on the matched-docs relation, not the postings scan);

@@ -96,6 +96,7 @@ class _Untouched:
         "rm3_search",
         "rm3_expand",
         "explain_score",
+        "fuzzy_search",
     ],
 )
 def test_empty_query_returns_empty_without_touching_index(spark, docs, name):
@@ -104,6 +105,7 @@ def test_empty_query_returns_empty_without_touching_index(spark, docs, name):
     calls = _wrappers(spark, index, docs, [], {0: "the of", 1: ""})
     calls["rm3_expand"] = lambda: Q.rm3_expand(index, docs, [], tokenizer=ws_tokens)
     calls["explain_score"] = lambda: Q.explain_score(index, [], [1, 2])
+    calls["fuzzy_search"] = lambda: Q.fuzzy_search(index, [])
     want = {
         "rm3_expand": "struct<term:string,weight:double>",
         "explain_score": "struct<doc_id:bigint,term:string,tf:bigint,df:bigint,"
